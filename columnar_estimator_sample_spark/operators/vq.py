@@ -1574,153 +1574,82 @@ def whitened_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _recall_census_two_lane(spark: SparkSession, raw: DataFrame,
                             white: DataFrame) -> DataFrame:
     """Two-row LSH-recall census over BOTH mil-lane PACKED frames
-    (vec_id, v: array<long>) at once, keyed by a variant column — the
-    q_ann_recall machinery run as ONE plan so the raw and whitened
-    lanes share every stage boundary (two independent censuses unioned
-    measured 4.3 s at sf0.1, mostly duplicated stage latency; this
-    variant-keyed form halves the stage count).
+    (vec_id, v: array<long>): the q_ann_recall instrument run as ONE
+    grouped Arrow kernel per variant.
 
-    r15 (guide §4.2): ground truth and signatures ride the packed-vector
-    Arrow kernels instead of the element-explode joins — the exact-dot
-    truth was a (variant, i)-keyed self-join with only 2·dim distinct
-    keys shuffling |pairs|·dim rows through SMJ, and the 48 plane sums
-    were a broadcast-join + 48-sum codegen aggregate. Both now run as
-    int64 einsums/matmuls over `_list_matrix` views (bit-identical:
-    int64 sums are exact and order-free; the cosine threshold applies
-    the same float64 expression tree, with Spark/DuckDB's NaN>=T
-    semantics preserved via not(cos < T)). Values are unchanged."""
+    The census is RECALL_N-bounded by contract, so each variant's audit
+    slice is at most a RECALL_N x dim int64 matrix (a RECALL_N^2 Gram)
+    at any corpus size: one in-memory computation per variant, where a
+    distributed pair join paid seconds of per-stage latency (16
+    exchanges at sf0.1) for milliseconds of arithmetic. Per variant the
+    kernel sorts rows by vec_id, then over the upper triangle
+    (vec_a < vec_b):
+
+    - truth: the exact int64 Gram ``V @ V.T`` and row norms, cosine as
+      the oracle's float64 expression ``dot / (sqrt(na) * sqrt(nb))``,
+      kept when ``>= ANN_COS_T``. A zero-norm vector has no cosine (SQL
+      division by zero is NULL), so its pairs are never truth;
+    - candidates: pairs sharing a key in any of the ANN_BANDS bands,
+      the keys being the sign bits of ``V[:, :min(dim, PCA_DIM)] @
+      signs`` packed ANN_ROWS per band (the corpus is PCA_DIM wide).
+
+    Int64 sums are exact and order-free, so the counts are
+    bit-identical to the relational oracle. A vec_id repeated within a
+    variant raises ValueError instead of miscounting. Variants with no
+    rows (an empty corpus) still report zeros."""
     import numpy as np
 
     from columnar_estimator_sample_spark.operators.similarity import (
-        ANN_BANDS, ANN_PLANES, ANN_ROWS, RECALL_N, _list_matrix,
+        ANN_BANDS, ANN_COS_T, ANN_PLANES, ANN_ROWS, RECALL_N, _list_matrix,
         _plane_signs,
     )
-    from columnar_estimator_sample_spark.operators.similarity import (
-        ANN_COS_T as _COS_T,
-    )
+    # PCA_DIM x ANN_PLANES ±1 table; its first d rows are the table for
+    # d-wide vectors (a sign depends only on (plane, element))
+    signs = np.array([_plane_signs(p, PCA_DIM) for p in range(ANN_PLANES)],
+                     dtype=np.int64).T
+    band_weights = np.left_shift(1, np.arange(ANN_ROWS, dtype=np.int64))
+
+    def census(key, tbl):
+        import pyarrow as pa
+        variant = key[0].as_py()
+        ids = tbl.column("vec_id").to_numpy()
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        if (ids[1:] == ids[:-1]).any():
+            raise ValueError(
+                f"recall census: duplicate vec_id in the {variant!r} lane")
+        V = _list_matrix(tbl.column("v").combine_chunks(), np)[order]
+        a, b = np.triu_indices(len(ids), k=1)
+        dot = (V @ V.T)[a, b].astype(np.float64)
+        norm = np.sqrt(np.einsum("ij,ij->i", V, V).astype(np.float64))
+        den = norm[a] * norm[b]
+        cos = np.divide(dot, den, out=np.full(len(a), np.nan),
+                        where=den != 0)
+        truth = cos >= ANN_COS_T
+        d = min(V.shape[1], PCA_DIM)
+        bits = (V[:, :d] @ signs[:d] > 0).astype(np.int64)
+        keys = bits.reshape(-1, ANN_BANDS, ANN_ROWS) @ band_weights
+        cand = (keys[a] == keys[b]).any(axis=1)
+        return pa.table({
+            "variant": [variant],
+            "n_truth": [int(truth.sum())],
+            "n_found": [int((truth & cand).sum())],
+            "n_candidates": [int(cand.sum())],
+            "n_vec": [len(ids)]})
+
+    counts = ("n_truth", "n_found", "n_candidates", "n_vec")
     packed = (raw.select(F.lit("raw").alias("variant"), "vec_id", "v")
               .unionByName(white.select(
                   F.lit("whitened").alias("variant"), "vec_id", "v"))
-              .filter(F.col("vec_id") < RECALL_N))
-    # one row per vector with >= 1 element — the exploded form's norms
-    # frame (empty arrays never explode, so they were absent there too)
-    nonempty = packed.filter(F.size("v") > 0)
-
-    # ---- exact-cosine ground truth: all-pairs within variant through
-    # the gather + int64-einsum kernel (RECALL_N-bounded by contract)
-    ids = nonempty.select("variant", "vec_id")
-    cand_all = (ids.select("variant", F.col("vec_id").alias("vec_a"))
-                .join(ids.select("variant", F.col("vec_id").alias("vec_b")),
-                      "variant")
-                .filter(F.col("vec_a") < F.col("vec_b")))
-    ga = nonempty.select("variant", F.col("vec_id").alias("vec_a"),
-                         F.col("v").alias("va"))
-    gb = nonempty.select("variant", F.col("vec_id").alias("vec_b"),
-                         F.col("v").alias("vb"))
-    gathered = (cand_all
-                .join(ga.hint("shuffle_hash"), ["variant", "vec_a"])
-                .join(gb.hint("shuffle_hash"), ["variant", "vec_b"]))
-    threshold = _COS_T
-
-    def score(batches):
-        import pyarrow as pa
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            cols = {f: i for i, f in enumerate(rb.schema.names)}
-            A = _list_matrix(rb.column(cols["va"]), np)
-            B = _list_matrix(rb.column(cols["vb"]), np)
-            dot = np.einsum("ij,ij->i", A, B)            # int64, exact
-            na = np.einsum("ij,ij->i", A, A)
-            nb = np.einsum("ij,ij->i", B, B)
-            cos = dot.astype(np.float64) / (
-                np.sqrt(na.astype(np.float64))
-                * np.sqrt(nb.astype(np.float64)))
-            # not(cos < T), NOT cos >= T: Spark and DuckDB both order
-            # NaN above every number, numpy orders it below — an
-            # all-zero pair (0/0 = NaN) must stay a truth pair exactly
-            # as it did in the relational form
-            keep = np.logical_not(cos < threshold)
-            mask = pa.array(keep)
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(cols["variant"]).filter(mask),
-                 rb.column(cols["vec_a"]).filter(mask),
-                 rb.column(cols["vec_b"]).filter(mask)],
-                ["variant", "vec_a", "vec_b"])
-
-    truth = gathered.mapInArrow(
-        score, "variant string, vec_a long, vec_b long")
-
-    # ---- LSH band keys: V @ S int64 matmul per batch (the relational
-    # form's inner sign join on i silently restricted sums to the first
-    # PCA_DIM elements; min(dim, PCA_DIM) replicates that exactly)
-    def project(batches):
-        import pyarrow as pa
-        sign_cache: dict = {}
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            cols = {f: i for i, f in enumerate(rb.schema.names)}
-            V = _list_matrix(rb.column(cols["v"]), np)
-            d = min(V.shape[1], PCA_DIM)
-            if d not in sign_cache:
-                sign_cache[d] = np.array(
-                    [_plane_signs(p, d) for p in range(ANN_PLANES)],
-                    dtype=np.int64).T              # d × planes
-            proj = V[:, :d] @ sign_cache[d]        # int64, exact
-            bits = (proj > 0).astype(np.int64)
-            n = len(bits)
-            keys = np.zeros((n, ANN_BANDS), dtype=np.int64)
-            for b in range(ANN_BANDS):
-                for k in range(ANN_ROWS):
-                    keys[:, b] += bits[:, b * ANN_ROWS + k] << k
-            idx = pa.array(np.repeat(np.arange(n), ANN_BANDS))
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(cols["variant"]).take(idx),
-                 rb.column(cols["vec_id"]).take(idx),
-                 pa.array(np.tile(np.arange(ANN_BANDS, dtype=np.int64),
-                                  n)),
-                 pa.array(keys.reshape(-1))],
-                ["variant", "vec_id", "band", "band_key"])
-
-    bands = nonempty.mapInArrow(
-        project, "variant string, vec_id long, band long, band_key long")
-    bl, br = bands.alias("l"), bands.alias("r")
-    cand = (bl.join(br, (F.col("l.variant") == F.col("r.variant"))
-                    & (F.col("l.band") == F.col("r.band"))
-                    & (F.col("l.band_key") == F.col("r.band_key"))
-                    & (F.col("l.vec_id") < F.col("r.vec_id")))
-            .select(F.col("l.variant").alias("variant"),
-                    F.col("l.vec_id").alias("vec_a"),
-                    F.col("r.vec_id").alias("vec_b"))
-            .dropDuplicates(["variant", "vec_a", "vec_b"]))
-    # r14: ONE pass over truth — the left_semi + separate truth census
-    # executed the expensive exact-dot subtree twice; a left join
-    # against the (distinct) candidate pairs with a hit marker folds
-    # n_truth and n_found into one aggregation. cand's dedup aggregate
-    # tops an exchange, so its two consumers share one execution via
-    # exchange reuse.
-    hit = cand.withColumn("__hit", F.lit(1))
-    tf = (truth.join(hit, ["variant", "vec_a", "vec_b"], "left")
-          .groupBy("variant")
-          .agg(F.count("*").cast("long").alias("n_truth"),
-               F.count("__hit").cast("long").alias("n_found")))
-    # per-variant scalars; n_vec (always RECALL_N rows per variant) is
-    # the base frame so a variant with an empty truth/candidate set
-    # still reports its zeros (counted over nonempty — exactly the
-    # vectors the exploded form's norms frame held)
-    base = nonempty.groupBy("variant").agg(
-        F.count("*").cast("long").alias("n_vec"))
-    c = cand.groupBy("variant").agg(
-        F.count("*").cast("long").alias("n_candidates"))
-    agg = (base.join(F.broadcast(tf), "variant", "left")
-           .join(F.broadcast(c), "variant", "left")
-           .select("variant",
-                   F.coalesce("n_truth", F.lit(0)).alias("n_truth"),
-                   F.coalesce("n_found", F.lit(0)).alias("n_found"),
-                   F.coalesce("n_candidates", F.lit(0))
-                   .alias("n_candidates"),
-                   "n_vec"))
+              .filter((F.col("vec_id") < RECALL_N) & (F.size("v") > 0)))
+    per_variant = packed.groupBy("variant").applyInArrow(
+        census, "variant string, "
+        + ", ".join(f"{c} long" for c in counts))
+    agg = (spark.sql("SELECT * FROM VALUES ('raw'), ('whitened')"
+                     " AS t(variant)")
+           .join(F.broadcast(per_variant), "variant", "left")
+           .select("variant", *[F.coalesce(c, F.lit(0)).alias(c)
+                                for c in counts]))
     return agg.select(
         "variant", "n_truth", "n_found",
         F.expr("(1000 * n_found) div GREATEST(n_truth, 1)")
@@ -1842,11 +1771,12 @@ def q_embed_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
     from columnar_estimator_sample_spark.operators.similarity import (
         RECALL_N,
     )
-    # each lane feeds 3 plan references (truth left/right, signatures);
+    # each lane feeds one plan reference (the census kernel's input);
     # the RECALL_N-bounded slices are lazily checkpointed AND memoized
     # per (session, sf_dir) — the audit lanes are written artifacts, so
-    # the whiten joins and the mil projection run once per session, not
-    # per invocation or per plan reference. Whitening commutes with the
+    # the whiten projection and the mil scan run once per session, not
+    # per invocation (rebuilding the lanes on every call measured about
+    # +0.3-0.4 s per warm call at sf0.1). Whitening commutes with the
     # slice filter: pn is per-vector and the eigenvector comes from the
     # full-corpus Gram memo either way.
     key = (spark.sparkContext.applicationId, sf_dir)

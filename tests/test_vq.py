@@ -324,3 +324,137 @@ class TestEmbedWhiten:
             assert r["recall_pm"] == (1000 * r["n_found"]
                                       // max(r["n_truth"], 1))
             assert r["n_candidates"] >= r["n_found"]
+
+    # Hostile shapes for the recall census, each on a hand-built scale
+    # factor (a tmp dir of parquet files IS a scale factor) and checked
+    # against the DuckDB oracle. Only embeddings are hand-built; the
+    # other tables link to the test SF's so the oracle's views resolve.
+
+    @staticmethod
+    def _vs_oracle(spark, sf_dir, tmp_path, embeddings_sql):
+        import os
+        import sys
+
+        import __spark_entry__
+        import duckdb
+        from columnar_estimator_sample_spark.operators.vq import (
+            q_embed_whiten,
+        )
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        sys.path.insert(0, os.path.join(repo, "tools"))
+        from check_oracle import compare, compare_types, run_duckdb
+
+        sf = str(tmp_path)
+        for f in os.listdir(sf_dir):
+            if f.endswith(".parquet") and f != "embeddings.parquet":
+                os.symlink(os.path.join(sf_dir, f), os.path.join(sf, f))
+        duckdb.sql(f"COPY ({embeddings_sql}) TO '{sf}/embeddings.parquet'"
+                   " (FORMAT PARQUET)")
+        res = q_embed_whiten(spark, sf)
+        spark_types = {f.name: f.dataType.simpleString()
+                       for f in res.schema.fields}
+        sdf = res.toPandas()
+        odf, duck_types = run_duckdb(
+            __spark_entry__.oracle_sql()["q_embed_whiten"], sf)
+        problems = (compare_types(duck_types, spark_types)
+                    + compare("q_embed_whiten", sdf, odf))
+        assert not problems, problems
+        return {r["variant"]: r for r in sdf.to_dict("records")}
+
+    # clustered 64-dim vectors (three directions plus a per-vector
+    # wobble): near pairs inside a cluster, far pairs across clusters
+    _CLUSTERED = ("[CAST(0.6 * sin((i % 3) * 13 + d)"
+                  " + 0.3 * sin(i * 7 + d * 3) AS FLOAT)"
+                  " FOR d IN range(64)]")
+
+    def test_empty_corpus_reports_zero_rows(self, spark, sf_dir, tmp_path):
+        rows = self._vs_oracle(spark, sf_dir, tmp_path, f"""
+            SELECT * FROM read_parquet('{sf_dir}/embeddings.parquet')
+            LIMIT 0""")
+        assert sorted(rows) == ["raw", "whitened"]
+        for r in rows.values():
+            assert r["n_truth"] == r["n_candidates"] == 0
+            assert r["recall_pm"] == r["candidate_frac_pm"] == 0
+
+    def test_zero_norm_vectors_are_never_truth(self, spark, sf_dir,
+                                               tmp_path):
+        # even vec_ids are all-zero: a zero norm has no cosine (SQL
+        # division by zero is NULL), so only the 6 nonzero vectors can
+        # form truth pairs; all-zero vectors share every band key
+        rows = self._vs_oracle(spark, sf_dir, tmp_path, f"""
+            SELECT CAST(i AS BIGINT) AS vec_id,
+                   CASE WHEN i % 2 = 0
+                        THEN [CAST(0.0 AS FLOAT) FOR d IN range(64)]
+                        ELSE {self._CLUSTERED} END AS embedding,
+                   CAST(0 AS INTEGER) AS label
+            FROM range(12) t(i)""")
+        raw = rows["raw"]
+        assert 0 < raw["n_truth"] <= 15
+        assert raw["n_candidates"] >= 15
+
+    def test_all_zero_corpus_has_no_truth(self, spark, sf_dir, tmp_path):
+        rows = self._vs_oracle(spark, sf_dir, tmp_path, """
+            SELECT CAST(i AS BIGINT) AS vec_id,
+                   [CAST(0.0 AS FLOAT) FOR d IN range(64)] AS embedding,
+                   CAST(0 AS INTEGER) AS label
+            FROM range(5) t(i)""")
+        for r in rows.values():
+            assert r["n_truth"] == 0
+            assert r["n_candidates"] == 10 and r["candidate_frac_pm"] == 1000
+
+    def test_identical_embeddings_every_pair_truth_and_candidate(
+            self, spark, sf_dir, tmp_path):
+        rows = self._vs_oracle(spark, sf_dir, tmp_path, """
+            SELECT CAST(i AS BIGINT) AS vec_id,
+                   [CAST(0.5 * sin(d) AS FLOAT) FOR d IN range(64)]
+                       AS embedding,
+                   CAST(0 AS INTEGER) AS label
+            FROM range(10) t(i)""")
+        raw = rows["raw"]
+        assert raw["n_truth"] == raw["n_found"] == raw["n_candidates"] == 45
+        assert raw["recall_pm"] == raw["candidate_frac_pm"] == 1000
+        # whitening maps identical vectors to identical residuals (all
+        # zero when the removed direction was theirs): still one bucket
+        assert rows["whitened"]["n_candidates"] == 45
+
+    def test_single_vector_has_no_pairs(self, spark, sf_dir, tmp_path):
+        rows = self._vs_oracle(spark, sf_dir, tmp_path, f"""
+            SELECT CAST(i AS BIGINT) AS vec_id,
+                   {self._CLUSTERED} AS embedding,
+                   CAST(0 AS INTEGER) AS label
+            FROM range(7, 8) t(i)""")
+        for r in rows.values():
+            assert r["n_truth"] == r["n_candidates"] == 0
+            assert r["candidate_frac_pm"] == 0
+
+    def test_sparse_shuffled_vec_ids(self, spark, sf_dir, tmp_path):
+        # 40 vec_ids scattered over [3, 290) plus 5 past RECALL_N,
+        # written in hash order, so neither row order nor id density
+        # lines up with the pair order the census counts
+        rows = self._vs_oracle(spark, sf_dir, tmp_path, f"""
+            SELECT CAST(CASE WHEN i < 40 THEN (i * 7 + 3) % 290
+                             ELSE 1000 + i END AS BIGINT) AS vec_id,
+                   {self._CLUSTERED} AS embedding,
+                   CAST(0 AS INTEGER) AS label
+            FROM range(45) t(i)
+            ORDER BY md5(CAST(i AS VARCHAR))""")
+        for r in rows.values():
+            assert 0 < r["n_found"] <= r["n_truth"]
+            assert r["n_candidates"] < 780
+
+    def test_duplicate_vec_id_raises(self, spark, tmp_path):
+        import duckdb
+        from pyspark.errors import PythonException
+
+        from columnar_estimator_sample_spark.operators.vq import (
+            q_embed_whiten,
+        )
+        duckdb.sql(f"""COPY (
+            SELECT CAST(i % 4 AS BIGINT) AS vec_id,
+                   {self._CLUSTERED} AS embedding,
+                   CAST(0 AS INTEGER) AS label
+            FROM range(6) t(i)) TO '{tmp_path}/embeddings.parquet'
+            (FORMAT PARQUET)""")
+        with pytest.raises(PythonException,
+                           match="ValueError: recall census: duplicate"):
+            q_embed_whiten(spark, str(tmp_path)).collect()

@@ -4,8 +4,9 @@ Builds the physical plan of EVERY registered query (analysis only — no
 execution) and enforces the engine's global anti-pattern invariants:
 
   * no ``BatchEvalPython`` anywhere — row-at-a-time Python never appears
-    in any plan; Python runs only as Arrow-batched ``MapInPandas`` /
-    ``ArrowEvalPython``, and only in the explicit allowlist below;
+    in any plan; Python runs only as Arrow-batched ``ARROW_NODES``
+    (scalar UDFs, ``mapIn*`` and grouped ``applyIn*`` maps), and only in
+    the explicit allowlist below;
   * no ``CartesianProduct`` anywhere — a shuffle cartesian is always a
     bug; broadcast 1-row scalar joins plan as BroadcastNestedLoopJoin
     and are fine.
@@ -52,11 +53,16 @@ ARROW_ALLOWED = {"q_media_features", "q_similarity_topk_fast",
                  # r13: the apply face shares the same
                  # checkpointed gather-scorer subtree
                  "q_semdedup", "q_semdedup_apply",
-                 # r15: the whiten recall census scores its exact-dot
-                 # ground truth and LSH band keys through the packed
-                 # int64 einsum/matmul kernels (guide §4.2), downstream
-                 # of the checkpointed audit lanes
+                 # the whiten recall census is one grouped Arrow kernel
+                 # per variant (FlatMapGroupsInArrow): exact int64 Gram
+                 # truth and LSH band keys over the RECALL_N-bounded,
+                 # checkpointed audit lanes
                  "q_embed_whiten"}
+
+# Physical nodes that run Arrow-batched Python: scalar Pandas/Arrow
+# UDFs, the mapIn* batch maps and the grouped applyIn* maps
+ARROW_NODES = ("ArrowEvalPython", "MapInPandas", "MapInArrow",
+               "FlatMapGroupsInArrow", "FlatMapGroupsInPandas")
 
 # Queries whose BUILDER legitimately runs Spark jobs. Everything else
 # must build its plan with ZERO jobs: a scan at plan/registry time is
@@ -417,8 +423,7 @@ def main() -> int:
                 "time (outside the documented allowlist)")
         has_pyrow = "BatchEvalPython" in plan
         has_cart = "CartesianProduct" in plan
-        has_arrow = ("ArrowEvalPython" in plan) or ("MapInPandas" in plan) \
-            or ("MapInArrow" in plan)
+        has_arrow = any(node in plan for node in ARROW_NODES)
         if has_pyrow:
             violations.append(f"{name}: BatchEvalPython (row Python)")
         if has_cart:
