@@ -17,6 +17,7 @@ Scale design, per operator:
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -107,8 +108,8 @@ def duplication_estimate(spark: SparkSession, sf_dir: str) -> int:
                                  "text").get("distinct_count")
                 if d is not None and str(d).isdigit() and int(d) > 0:
                     return max(n // int(d), 1)
-    except Exception:
-        pass  # fall through to the census probe
+    except AnalysisException:
+        pass  # no such catalog table: fall through to the census probe
     n_docs, n_distinct = digest_census(spark, sf_dir)
     return max(n_docs // max(n_distinct, 1), 1)
 
@@ -353,12 +354,12 @@ def contract_exact_dups(df: DataFrame, id_col: str, payload_col: str,
     windowed frame, so a consumer draining both reuses a single scan +
     fp exchange (ReusedExchange). The r11 A/B measured this INSIDE the
     real consumers at 100× data (two processes, warm min-of-5,
-    tools/probe_contract_form_consumers.py): window 6.5/5.4/5.2/5.4 s
-    vs agg+join 19.1/13.0/12.2/6.4 s for minhash LSH / cosine set-join
-    / prefix filter / embedding LSH — the window form wins 1.2–2.9×
-    even though the ISOLATED contraction probe
-    (tools/probe_contract_skew.py) has the agg+join form ahead; the
-    microbenchmark misses the consumer-level exchange reuse. The priced
+    SCALE.md §4): window 6.5/5.4/5.2/5.4 s vs agg+join
+    19.1/13.0/12.2/6.4 s for minhash LSH / cosine set-join / prefix
+    filter / embedding LSH — the window form wins 1.2–2.9× even though
+    the ISOLATED planted-copy contraction probe (SCALE.md §4) has the
+    agg+join form ahead; the microbenchmark misses the consumer-level
+    exchange reuse. The priced
     residual risk stays: one fingerprint group's payload lands in one
     task, so a pathologically viral corpus (≫10⁶ byte-identical copies
     of one doc) should switch to :func:`contract_exact_dups_aggjoin`
@@ -392,11 +393,11 @@ def contract_exact_dups_aggjoin(df: DataFrame, id_col: str,
 
     This is the documented SWITCH for pathologically viral corpora
     (≫10⁶ byte-identical copies of one payload: 1.9× ahead of the
-    window form on the planted 10⁶-copy contraction,
-    tools/probe_contract_skew.py), NOT the default: inside real
-    consumers the window form's shared scan + fp exchange wins 1.2–2.9×
-    at 100× data (tools/probe_contract_form_consumers.py) because this
-    form rescans and refingerprints the payload once per branch."""
+    window form on the planted 10⁶-copy contraction), NOT the default:
+    inside real consumers the window form's shared scan + fp exchange
+    wins 1.2–2.9× at 100× data because this form rescans and
+    refingerprints the payload once per branch (both measurements:
+    SCALE.md §4)."""
     fpc = fp if fp is not None else F.md5(payload_col)
     keyed = df.withColumn("fp", fpc)
     agg = (keyed.groupBy("fp")

@@ -241,13 +241,11 @@ def decode_header(payload: bytes, media_type: str) -> dict:
             "duration_ms": dur}
 
 
-def extract_features(media: DataFrame, batch_size: int = 256) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads. The UDF
     consumes per-partition batch iterators (mapInPandas, SURVEY §2.6 D5:
-    batching is the runtime's concern, surfaced only as batch shape)."""
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(batch_size))
+    batching is the runtime's concern, surfaced only as batch shape; the
+    batch size is the session's ``arrow.maxRecordsPerBatch``)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -358,8 +356,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented :func:`decode_stub` stage.)
 
     Scale: blobs never shuffle — they are consumed inside the scan-side
-    mapInPandas task and only integer metadata reaches the aggregate;
-    batch size is capped so megabyte blobs can't blow an Arrow batch.
+    mapInPandas task and only integer metadata reaches the aggregate.
     Deliberately NOT content-addressed (r9, measured): the header parse
     reads a few dozen bytes per blob — cheaper than the md5 + digest
     exchange map_distinct_blobs would spend to dedup it (sf10 probe:
@@ -367,7 +364,6 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline pays for FULL-decode kernels (q_media_pixel_stats,
     q_media_jpeg_roundtrip, the near-dup hashes), not for header
     sniffing."""
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
     media = documents_as_media_containers(
         table(spark, sf_dir, "documents"))
 

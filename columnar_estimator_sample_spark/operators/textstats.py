@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1008,7 +1009,7 @@ def _ccnet_docs_per_lang_bound(spark: SparkSession, sf_dir: str) -> int:
                                  "lang").get("distinct_count")
                 if d is not None and str(d).isdigit() and int(d) > 0:
                     ndv = int(d)
-    except Exception:
+    except AnalysisException:
         pass  # no analyzed catalog table in this session -> bound by 1
     return n // max(ndv, 1)
 

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -83,7 +84,7 @@ def corpus_table_matches(spark: SparkSession, name: str,
         tagged = props.get(CORPUS_DIR_PROP)
         if tagged is not None:
             return os.path.abspath(tagged) == want
-    except Exception:
+    except AnalysisException:
         pass  # temp view or pre-property table: try the location probe
     try:
         rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
@@ -92,8 +93,8 @@ def corpus_table_matches(spark: SparkSession, name: str,
         if loc.startswith("file:"):
             loc = loc[len("file:"):]
         return bool(loc) and os.path.abspath(loc).startswith(want + os.sep)
-    except Exception:
-        return False
+    except AnalysisException:
+        return False  # no such table
 
 
 def catalog_stats(spark: SparkSession, name: str) -> dict[str, str]:

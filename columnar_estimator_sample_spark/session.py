@@ -2,11 +2,18 @@
 
 The reference hand-tunes its pipeline with thread counts, prefetch and
 sloppiness knobs (/root/reference/trainer.py:189-246); on Spark all of that
-is runtime-level and comes from a handful of session configs. This module
-centralizes them so tests, bench and the driver entry all run the same way.
+is runtime-level and comes from a handful of session configs. They are set
+here, once, when the session is built, so tests, bench and the driver entry
+all run the same way. There is no second, per-query tuning layer: building
+a query's DataFrame leaves the session's confs as its caller set them
+(tests/test_registry.py pins this), so every query runs under the session
+its caller built.
 
 Scale notes (100 TB / 1000-executor design intent):
   * AQE on -> runtime coalescing, skew-join splitting, dynamic broadcast.
+    The coalescer keeps Spark's 1 MB partition floor: a 64k floor (and
+    per-query 1m pins over it) measured within run-to-run noise at 4 cores
+    (SCALE.md, "Coalescing floor removed").
   * CBO + histogram stats on -> join reordering fed by the stats module
     (plans/stats.py), the Spark-native analogue of the reference's
     hand-maintained cardinality catalog (trainer.py:91-118).
@@ -70,16 +77,6 @@ def get_spark(app_name: str = "columnar_estimator_sample_spark",
         .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE's coalescer floors post-shuffle partitions at 1 MB by
-        # default; on CPU-dense small-byte exchanges (candidate-pair
-        # verification: winnow / prefix-filter / cosine set-join) that
-        # floor serializes multi-second stages onto 1-4 cores. 64k keeps
-        # those spread across the executor (r14 interleaved A/B: -0.9 to
-        # -1.4 s each at sf0.1, neutral elsewhere). Scale-safe: the floor
-        # only binds when partitions are sub-MB — at production sizes
-        # coalescing targets advisoryPartitionSizeInBytes regardless.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.cbo.enabled", "true")
         .config("spark.sql.cbo.joinReorder.enabled", "true")

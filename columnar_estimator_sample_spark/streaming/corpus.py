@@ -312,9 +312,9 @@ def ann_ingest_stream(spark: SparkSession, sf_dir: str,
     terminates cleanly, so a failed drain's re-invocation RESUMES it —
     availableNow skips the committed epochs (their partitions are
     already landed) and re-runs only the uncommitted one; the base
-    index build is likewise skipped when the table already exists from
-    the failed attempt. Without that, recovery was reachable only for
-    in-run batch retries (the round-12 advisory). Bucketing by
+    index build is likewise skipped while that checkpoint survives.
+    Without that, recovery was reachable only for in-run batch retries
+    (the round-12 advisory). Bucketing by
     centroid_id within partitions keeps the census/probe plans
     exchange-free (the corpus-export layout)."""
     import hashlib
@@ -350,10 +350,13 @@ def ann_ingest_stream(spark: SparkSession, sf_dir: str,
                  + hashlib.md5(sf_dir.encode()).hexdigest()[:8] + "_"
                  + spark.sparkContext.applicationId)
     name = f"ivf_ings_{tag}"
-    # skip the base build when a FAILED prior drain in this session
-    # already landed it — rebuilding with overwrite would wipe the
-    # committed epochs the resumed checkpoint will not replay
-    if not spark.catalog.tableExists(name):
+    ckpt_name = f"ckpt_ann_ingest_{tag}"
+    # skip the base build only when resuming a FAILED prior drain (its
+    # checkpoint survives; a clean drain and reset_handles remove it) —
+    # rebuilding with overwrite would wipe the committed epochs the
+    # resumed checkpoint will not replay. The catalog entry is no
+    # signal: it outlives reset_handles' sweep of the base files.
+    if not os.path.isdir(_drain_ckpt(ckpt_name)):
         base = register_tempdir(
             tempfile.mkdtemp(prefix="spark-graft-ivfs-"))
         bucketed_ctas(
@@ -371,11 +374,17 @@ def ann_ingest_stream(spark: SparkSession, sf_dir: str,
 
     src = (embeddings_stream(spark, sf_dir, files_per_trigger)
            if arrivals is None else arrivals)
-    _epoch_drain(spark, src, ingest_batch, f"ckpt_ann_ingest_{tag}",
-                 name)
+    _epoch_drain(spark, src, ingest_batch, ckpt_name, name)
     handle = spark.table(name).select("vec_id", "centroid_id", "phase")
     _ANN_INGEST_TABLES[key] = handle
     return handle
+
+
+def _drain_ckpt(ckpt_name: str) -> str:
+    """The deterministic checkpoint path of an :func:`_epoch_drain`."""
+    import os
+    import tempfile
+    return os.path.join(tempfile.gettempdir(), ckpt_name)
 
 
 def _epoch_drain(spark: SparkSession, src: DataFrame, ingest_batch,
@@ -398,15 +407,12 @@ def _epoch_drain(spark: SparkSession, src: DataFrame, ingest_batch,
       census silently reads the pre-append listing (caught in r12 by
       the differential gate: n_batch=0 while the files were on disk).
     """
-    import os
     import shutil
-    import tempfile
 
     from columnar_estimator_sample_spark.sources.tables import (
         register_tempdir,
     )
-    ckpt = register_tempdir(os.path.join(tempfile.gettempdir(),
-                                         ckpt_name))
+    ckpt = register_tempdir(_drain_ckpt(ckpt_name))
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
                                None)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -515,7 +521,7 @@ def neardup_ingest_stream(spark: SparkSession, sf_dir: str,
     epoch overwrites its own partition), deterministic per-(session,
     sf_dir) checkpoint deleted only on clean termination (a failed
     drain's re-invocation resumes, committed epochs skipped), and the
-    base build skipped when the table survives a failed attempt.
+    base build skipped while a failed attempt's checkpoint survives.
 
     At 100 TB: the band index IS the structure a production near-dup
     service maintains — candidate generation joins new bands against
@@ -547,7 +553,8 @@ def neardup_ingest_stream(spark: SparkSession, sf_dir: str,
                  + hashlib.md5(sf_dir.encode()).hexdigest()[:8] + "_"
                  + spark.sparkContext.applicationId)
     name = f"lsh_ings_{tag}"
-    if not spark.catalog.tableExists(name):
+    ckpt_name = f"ckpt_neardup_ingest_{tag}"
+    if not os.path.isdir(_drain_ckpt(ckpt_name)):
         base = register_tempdir(
             tempfile.mkdtemp(prefix="spark-graft-lsh-"))
         bucketed_ctas(
@@ -569,8 +576,7 @@ def neardup_ingest_stream(spark: SparkSession, sf_dir: str,
 
     src = (documents_stream(spark, sf_dir, files_per_trigger)
            if arrivals is None else arrivals)
-    _epoch_drain(spark, src, ingest_batch, f"ckpt_neardup_ingest_{tag}",
-                 name)
+    _epoch_drain(spark, src, ingest_batch, ckpt_name, name)
     handle = spark.table(name).select("doc_id", "band", "band_key",
                                       "phase")
     _NEARDUP_INGEST_TABLES[key] = handle

@@ -733,3 +733,34 @@ def test_corpus_export_rebuilds_after_reset_handles(spark, sf_dir):
     assert set(corpus_export_table(spark, sf_dir).inputFiles()) \
         .isdisjoint(first_files)
     tables.reset_handles()
+
+
+@pytest.mark.parametrize("helper", [
+    "operators.dedup.duplication_estimate",
+    "operators.textstats._ccnet_docs_per_lang_bound",
+])
+def test_sizing_helper_surfaces_catalog_errors(spark, sf_dir, monkeypatch,
+                                               helper):
+    """The plan-time sizing helpers fall back only when the catalog has
+    no such table (AnalysisException). Any other failure of the catalog
+    lane reaches the caller instead of silently choosing a lane."""
+    import importlib
+
+    from columnar_estimator_sample_spark.plans import stats
+
+    mod_name, fn_name = helper.rsplit(".", 1)
+    fn = getattr(importlib.import_module(
+        f"columnar_estimator_sample_spark.{mod_name}"), fn_name)
+
+    def boom(spark, name):
+        raise RuntimeError("catalog read failed")
+
+    monkeypatch.setattr(stats, "corpus_table_matches", lambda s, n, d: True)
+    monkeypatch.setattr(stats, "catalog_stats", boom)
+    spark.read.parquet(f"{sf_dir}/documents.parquet") \
+        .createOrReplaceTempView("documents")
+    try:
+        with pytest.raises(RuntimeError, match="catalog read failed"):
+            fn(spark, sf_dir)
+    finally:
+        spark.catalog.dropTempView("documents")

@@ -1,5 +1,5 @@
-"""Round-15 optimization internals: conf pins, miner dedup keying,
-packed-kernel guards."""
+"""Round-15 optimization internals: miner dedup keying, packed-kernel
+guards."""
 
 from __future__ import annotations
 
@@ -7,36 +7,6 @@ import numpy as np
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
-
-
-class TestConfPins:
-    """registry._with_conf_pins: a pinned query's build sets its conf,
-    and the next (un-pinned) build restores the session default — pins
-    can never leak across queries."""
-
-    FLOOR = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-
-    def test_pin_applies_and_resets(self, spark, sf_dir):
-        import __spark_entry__ as entrymod
-        from columnar_estimator_sample_spark import registry
-
-        qs = entrymod.queries()
-        assert "q01_pricing_summary" in registry._QUERY_CONF_PINS
-        qs["q01_pricing_summary"](spark, sf_dir)
-        assert spark.conf.get(self.FLOOR) == "1m"
-        # a registered query without a pin restores the default
-        assert "q03_shipping_priority" not in registry._QUERY_CONF_PINS
-        qs["q03_shipping_priority"](spark, sf_dir)
-        assert spark.conf.get(self.FLOOR) == \
-            registry._default_confs()[self.FLOOR]
-
-    def test_pins_are_registered_names(self):
-        import __spark_entry__ as entrymod
-        from columnar_estimator_sample_spark import registry
-
-        qs = entrymod.queries()
-        missing = [n for n in registry._QUERY_CONF_PINS if n not in qs]
-        assert missing == []
 
 
 class TestDedupItems:

@@ -215,6 +215,27 @@ class TestCLI:
         assert "25" in capsys.readouterr().out
 
 
+def test_query_builds_leave_session_conf_unchanged(spark, sf_dir):
+    """Building a DataFrame must not retune the shared session: every
+    query runs under the confs its caller set. The events reader's
+    documented UTC / nanosAsLong pins are put in place first, so only
+    a build-time write can show up here."""
+    from columnar_estimator_sample_spark.operators.multimodal import (
+        documents_as_media, extract_features,
+    )
+    from columnar_estimator_sample_spark.sources.tables import table
+
+    table(spark, sf_dir, "events")
+    builds = {name: (lambda n=name: QUERIES[n](spark, sf_dir)) for name in
+              ("q01_pricing_summary", "q_dsir_bigram", "q_media_features")}
+    builds["extract_features"] = lambda: extract_features(
+        documents_as_media(table(spark, sf_dir, "documents")))
+    for name, build in builds.items():
+        before = spark.conf.getAll
+        build()
+        assert spark.conf.getAll == before, name
+
+
 def test_reset_handles_clears_registered_memos(spark, sf_dir):
     """reset_handles() is the single cache-invalidation point: it must
     clear the operator-level per-session memos (IVF / ER / set-join)

@@ -506,6 +506,37 @@ class TestStreamAnnIngestRecovery:
             tables.reset_handles()
 
 
+@pytest.mark.parametrize("name", ["q_stream_ann_ingest",
+                                  "q_stream_neardup_ingest"])
+def test_stream_ingest_rebuilds_after_reset_handles(spark, sf_dir,
+                                                    tmp_path, name):
+    """reset_handles() sweeps the maintained index's base files; the
+    next drain must rebuild the base rather than append batch epochs to
+    the stale catalog entry. Both drains match the oracle."""
+    import sys
+
+    import __spark_entry__
+    from columnar_estimator_sample_spark.sources import tables
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(repo, "tools"))
+    from check_oracle import compare, run_duckdb
+
+    sf = str(tmp_path)
+    for f in os.listdir(sf_dir):
+        if f.endswith(".parquet"):
+            os.symlink(os.path.join(sf_dir, f), os.path.join(sf, f))
+    odf, _ = run_duckdb(__spark_entry__.oracle_sql()[name], sf)
+    query = __spark_entry__.queries()[name]
+    try:
+        for drain in ("first", "after reset"):
+            problems = compare(name, query(spark, sf).toPandas(), odf)
+            assert not problems, (drain, problems)
+            tables.reset_handles()
+    finally:
+        tables.reset_handles()
+
+
 class TestCompaction:
     def test_compact_write_sizes_files(self, spark, sf_dir, tmp_path):
         from columnar_estimator_sample_spark.sources.io import (
